@@ -477,11 +477,13 @@ class TopicHandle:
           offset-controlled consumer semantics the reference feed loop
           defines. ``native=False`` forces it for uncapped reads too.
 
-        Note on triggers: ``batch_size`` caps each trigger's advance via
-        latestOffset. Trigger.AvailableNow snapshots the FIRST announced
-        offset and stops there, so pair batch_size with a
-        ProcessingTime trigger (+ await_completion to terminate on topic
-        completion); use AvailableNow only for uncapped drains.
+        Note on triggers: Trigger.AvailableNow drains a completed topic
+        in one run and honours ``files_per_trigger`` on the native
+        source (one epoch per capped slice of published files). Only
+        ``batch_size`` (custom source) needs a ProcessingTime trigger
+        (+ await_completion to terminate on topic completion): it caps
+        each trigger's advance via latestOffset, and AvailableNow
+        snapshots the FIRST announced offset and stops there.
 
         ``checkpoint``: pass the SAME path you give the query's
         writeStream checkpointLocation. The custom source then persists

@@ -18,6 +18,9 @@ Conventions:
 
 from __future__ import annotations
 
+import os
+import tempfile
+from contextlib import contextmanager
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -968,39 +971,61 @@ def _events_stream(topic, max_event_id: int) -> DataFrame:
     )
 
 
-def _run_stream(spark, df, sink_name: str, output_mode: str):
-    """Checkpointed AvailableNow drain into a uniquely-named memory
-    sink; shuffle partitions pinned to 4 for the run (the stateful ops
-    allocate one state store per shuffle partition at first run; a few
-    thousand gate events need a handful, not 32)."""
-    import os
-    import tempfile
+# Drain policy for every streaming gate, stated once here: each gate
+# reads a fixture topic that is fully published and marked complete
+# before its query starts, through the native file source, so a
+# one-shot Trigger.AvailableNow run is the whole drain (mofka's "drain,
+# then NoMoreEvents"). AvailableNow honours files_per_trigger on that
+# source, so a gate that reads with files_per_trigger=1 still gets one
+# epoch per published file: two epochs at every sf (two partitions, one
+# file each), the second exercising the batch-vs-store history path.
+# The gates' store answers are epoch-split-invariant (oracle-verified).
+_DRAIN_TIMEOUT_S = 300
 
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="mofka-streamq-"), "ckpt")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+
+@contextmanager
+def _pinned_shuffle(spark: SparkSession):
+    """Run the block at shuffle width 4, restoring the prior width after:
+    stateful ops allocate one state store per shuffle partition, and a
+    few thousand gate rows need a handful of partitions, not 32."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4")
     try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _drain(spark: SparkSession, writer) -> None:
+    """Run a configured DataStreamWriter (a foreachBatch sink or a named
+    memory sink) to the end of its source as one AvailableNow query with
+    a fresh checkpoint, under _pinned_shuffle. A drain that outlives
+    _DRAIN_TIMEOUT_S is stopped and raises instead of leaving a partial
+    answer behind. The terminated query is released from the manager
+    (its retained plans and progress history age the session; see
+    streaming/completion.py); a memory sink's table lives in the
+    catalog, so it outlives the query."""
+    ckpt = os.path.join(tempfile.mkdtemp(prefix="mofka-drain-"), "ckpt")
+    with _pinned_shuffle(spark):
         q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(sink_name)
-            .option("checkpointLocation", ckpt)
+            writer.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        # release the manager's reference to the terminated query (its
-        # retained execution plans + progress history age the session;
-        # see streaming/completion.py). The memory-sink TABLE lives in
-        # the catalog, not on the query object, so the returned frame
-        # is unaffected.
         try:
+            if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+                raise RuntimeError(
+                    f"streaming drain did not finish in {_DRAIN_TIMEOUT_S}s"
+                )
+        finally:
+            q.stop()
             spark.streams.resetTerminated()
-        except Exception:  # noqa: BLE001 — hygiene only
-            pass
-    return spark.table(sink_name)
+
+
+def _store_path(prefix: str) -> str:
+    """A fresh, not-yet-created store directory for a gate's sink."""
+    return os.path.join(tempfile.mkdtemp(prefix=prefix), "store")
 
 
 # Streaming event-time aggregation END-TO-END: events flow through the
@@ -1030,9 +1055,12 @@ def q_streaming_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
     )
-    out = _run_stream(
-        spark, agg, "hstats_" + uuid.uuid4().hex[:8], "complete"
+    name = "hstats_" + uuid.uuid4().hex[:8]
+    _drain(
+        spark,
+        agg.writeStream.format("memory").queryName(name).outputMode("complete"),
     )
+    out = spark.table(name)
     return out.select(
         F.col("w.start").alias("hour"), "event_type", "n", "sum_value"
     )
@@ -1071,9 +1099,14 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = parsed.groupBy(
         F.session_window("ts", "30 minutes").alias("sw"), "user_id"
     ).agg(F.count("*").alias("n_ev"))
-    out = _run_stream(
-        spark, sessions, "sess_" + uuid.uuid4().hex[:8], "complete"
+    name = "sess_" + uuid.uuid4().hex[:8]
+    _drain(
+        spark,
+        sessions.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete"),
     )
+    out = spark.table(name)
     return (
         out.groupBy("user_id")
         .agg(
@@ -1891,9 +1924,9 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             dedup.normalize_text(F.get_json_object("metadata", "$.text"))
         ).alias("content_hash")
     )
-    return _run_stream(
-        spark, out, "sdedup_" + uuid.uuid4().hex[:8], "append"
-    )
+    name = "sdedup_" + uuid.uuid4().hex[:8]
+    _drain(spark, out.writeStream.format("memory").queryName(name))
+    return spark.table(name)
 
 
 # Incremental NEAR-dup (streaming/neardup.py): documents stream through
@@ -1933,21 +1966,11 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.neardup import neardup_sink, read_result
 
     topic = _stream_fixture(spark, sf_dir, "docs")
-    # files_per_trigger=1 over the fixture log (one published file per
-    # partition, 2 partitions at every sf) => exactly TWO epochs: the
-    # second epoch exercises the batch-vs-store history path (the thing
-    # under test) and per-epoch job overhead stays constant as sf
-    # grows, while the drain runs the native vectorized source (no
-    # per-query Python source runner — guide §4). The store's final
-    # answer is epoch-split-invariant by design (read_result derives
-    # from the accumulated edge SET), so the result is unchanged —
-    # oracle-verified. num_hashes=32, bands=16 (r=2): true-pair
+    # read_result derives from the accumulated edge SET, so the answer
+    # is epoch-split-invariant. num_hashes=32, bands=16 (r=2): true-pair
     # miss prob at s>=0.8 is (1-0.8^2)^16 ~ 8e-8, so the hash-match
     # gate still holds; the extra false candidates r=2 admits are
     # killed by the exact verify.
@@ -1955,26 +1978,9 @@ def q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.get_json_object("metadata", "$.doc_id").cast("long").alias("id"),
         F.get_json_object("metadata", "$.text").alias("text"),
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-neardup-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                neardup_sink(store, num_hashes=32, bands=16)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_neardup did not drain the topic")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-neardup-")
+    sink = neardup_sink(store, num_hashes=32, bands=16)
+    _drain(spark, parsed.writeStream.foreachBatch(sink))
     return read_result(spark, store)
 
 
@@ -1994,9 +2000,6 @@ def q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.annindex import ann_index_sink, search_index
 
     topic = _stream_fixture(spark, sf_dir, "vecs")
@@ -2004,11 +2007,6 @@ def q_streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = similarity.fit_centroids(
         emb, "vec_id", "embedding", n_centroids=8, seed=7
     )
-    # files_per_trigger=1: one published log file per partition (2
-    # partitions at every sf) => exactly two epochs on the native
-    # source; the store's final answer is epoch-split-invariant
-    # (oracle-verified), the second epoch exercises the
-    # batch-vs-store history path.
     parsed = (
         topic.read_stream(files_per_trigger=1)
         .select(
@@ -2018,26 +2016,9 @@ def q_streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("j.vec_id").alias("id"), F.col("j.embedding"))
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-annidx-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                ann_index_sink(store, centroids, id_col="id")
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_ann_index did not drain the topic")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-annidx-")
+    sink = ann_index_sink(store, centroids, id_col="id")
+    _drain(spark, parsed.writeStream.foreachBatch(sink))
     queries_df = emb.filter(F.col("vec_id") < 8)
     approx = search_index(
         spark, store, queries_df, centroids, k=5, nprobe=6
@@ -2065,31 +2046,15 @@ def q_streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.rollup import read_rollup, rollup_sink
 
     topic = _stream_fixture(spark, sf_dir, "events")
     parsed = _events_stream(topic, 5000).select("event_type", "value")
-    root = tempfile.mkdtemp(prefix="mofka-rollup-")
-    agg_path = os.path.join(root, "agg")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        aggs = {"value": ["count", "sum"]}
-        q = (
-            parsed.writeStream.foreachBatch(
-                rollup_sink(agg_path, ["event_type"], aggs)
-            )
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    out = read_rollup(spark, agg_path, ["event_type"], aggs)
+    store = _store_path("mofka-rollup-")
+    aggs = {"value": ["count", "sum"]}
+    sink = rollup_sink(store, ["event_type"], aggs)
+    _drain(spark, parsed.writeStream.foreachBatch(sink))
+    out = read_rollup(spark, store, ["event_type"], aggs)
     return out.select(
         "event_type",
         "value_count",
@@ -2133,9 +2098,6 @@ def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.operators.text import token_count, token_count_bpe
     from mofka_spark.streaming.rollup import read_rollup, rollup_sink
 
@@ -2151,29 +2113,16 @@ def q_streaming_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_count_bpe(F.col("text")).cast("long").alias("n_bpe"),
         F.length("text").cast("long").alias("n_chars"),
     )
-    root = tempfile.mkdtemp(prefix="mofka-fert-")
-    agg_path = os.path.join(root, "agg")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    store = _store_path("mofka-fert-")
     aggs = {
         "text": "count",
         "n_words": "sum",
         "n_bpe": "sum",
         "n_chars": "sum",
     }
-    try:
-        q = (
-            proj.writeStream.foreachBatch(
-                rollup_sink(agg_path, ["lang"], aggs)
-            )
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    out = read_rollup(spark, agg_path, ["lang"], aggs)
+    sink = rollup_sink(store, ["lang"], aggs)
+    _drain(spark, proj.writeStream.foreachBatch(sink))
+    out = read_rollup(spark, store, ["lang"], aggs)
     return out.select(
         "lang",
         F.col("text_count").alias("n_docs"),
@@ -3048,15 +2997,11 @@ def q_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.client import Driver
     from mofka_spark.streaming.sink import topic_sink
 
     src = _stream_fixture(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="mofka-pipe-")
-    driver = Driver(spark, root)
+    driver = Driver(spark, tempfile.mkdtemp(prefix="mofka-pipe-"))
     driver.create_topic("pipe-dst", num_partitions=2)
     derived = (
         _events_stream(src, 2500)
@@ -3071,15 +3016,8 @@ def q_streaming_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("metadata")
         )
     )
-    q = (
-        derived.writeStream.foreachBatch(
-            topic_sink(driver, "pipe-dst", data_col=None, sink_id="pipe")
-        )
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    sink = topic_sink(driver, "pipe-dst", data_col=None, sink_id="pipe")
+    _drain(spark, derived.writeStream.foreachBatch(sink))
     out = driver.open_topic("pipe-dst").dataframe()
     m = F.from_json("metadata", "event_id long, user_id long, doubled double")
     return out.select(m.alias("m")).select(
@@ -3149,9 +3087,9 @@ def q_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sessions = sessionize_stream(parsed, gap_sec=1800, watermark_delay="1 minute")
-    out = _run_stream(
-        spark, sessions, "stateful_" + uuid.uuid4().hex[:8], "append"
-    )
+    name = "stateful_" + uuid.uuid4().hex[:8]
+    _drain(spark, sessions.writeStream.format("memory").queryName(name))
+    out = spark.table(name)
     return out.filter(F.col("session_start") <= F.lit(gmax))
 
 
@@ -3201,9 +3139,9 @@ def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
     )
-    out = _run_stream(
-        spark, joined, "sjoin_" + uuid.uuid4().hex[:8], "append"
-    )
+    name = "sjoin_" + uuid.uuid4().hex[:8]
+    _drain(spark, joined.writeStream.format("memory").queryName(name))
+    out = spark.table(name)
     return out.select(
         F.col("c_id").alias("click_id"),
         F.col("p_id").alias("purchase_id"),
@@ -4263,39 +4201,15 @@ def q_fuzzy_part_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.textindex import index_sink, read_index
 
     topic = _stream_fixture(spark, sf_dir, "docs")
-    # files_per_trigger=1: one published log file per partition (2
-    # partitions at every sf) => exactly two epochs on the native
-    # source; the store's final answer is epoch-split-invariant
-    # (oracle-verified), the second epoch exercises the
-    # batch-vs-store history path.
     parsed = topic.read_stream(files_per_trigger=1).select(
         F.get_json_object("metadata", "$.doc_id").cast("long").alias("id"),
         F.get_json_object("metadata", "$.text").alias("text"),
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-textidx-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(index_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_inverted_index did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-textidx-")
+    _drain(spark, parsed.writeStream.foreachBatch(index_sink(store)))
     idx = read_index(spark, store, min_df=2, max_df_ratio=0.95)
     return idx.select(
         "token",
@@ -4315,37 +4229,15 @@ def q_streaming_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     _bm25_oracle(["hash", "merge", "window"], where="AND doc_id < 1000"),
 )
 def q_streaming_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.textindex import index_sink, read_bm25
 
     topic = _stream_fixture(spark, sf_dir, "docs")
-    # files_per_trigger=1 => exactly two epochs on the native
-    # source (one published log file per partition); final answer
-    # epoch-split-invariant, oracle-verified.
     parsed = topic.read_stream(files_per_trigger=1).select(
         F.get_json_object("metadata", "$.doc_id").cast("long").alias("id"),
         F.get_json_object("metadata", "$.text").alias("text"),
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-bm25idx-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(index_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_bm25 did not drain the topic")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-bm25idx-")
+    _drain(spark, parsed.writeStream.foreachBatch(index_sink(store)))
     return read_bm25(spark, store, ["hash", "merge", "window"])
 
 
@@ -4471,9 +4363,6 @@ def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.operators import quality
     from mofka_spark.streaming.monitor import audit_sink, read_audit
 
@@ -4486,22 +4375,8 @@ def q_streaming_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed = _events_stream(topic, 5000).select(
         "user_id", "value", "event_type"
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-monitor-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(audit_sink(store, rules))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-monitor-")
+    _drain(spark, parsed.writeStream.foreachBatch(audit_sink(store, rules)))
     return read_audit(spark, store, rules)
 
 
@@ -4975,18 +4850,10 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.operators.dedup import normalize_text
     from mofka_spark.streaming.heavyhitters import heavyhitter_sink, read_top_k
 
     topic = _stream_fixture(spark, sf_dir, "docs")
-    # files_per_trigger=1: one published log file per partition (2
-    # partitions at every sf) => exactly two epochs on the native
-    # source; the store's final answer is epoch-split-invariant
-    # (oracle-verified), the second epoch exercises the
-    # batch-vs-store history path.
     items = topic.read_stream(files_per_trigger=1).select(
         F.explode(
             F.split(
@@ -4994,26 +4861,9 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("item")
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-hh-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            items.writeStream.foreachBatch(
-                heavyhitter_sink(store, m_per_epoch=200_000)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_heavy_hitters did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-hh-")
+    sink = heavyhitter_sink(store, m_per_epoch=200_000)
+    _drain(spark, items.writeStream.foreachBatch(sink))
     return read_top_k(spark, store, k=20)
 
 
@@ -5233,17 +5083,9 @@ def _streaming_pca_oracle(iters: int = 4) -> str:
 # the incremental maintenance must be invisible in the eigenvector.
 @query("streaming_pca", _streaming_pca_oracle(iters=4))
 def q_streaming_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.moments import moments_sink, read_component
 
     topic = _stream_fixture(spark, sf_dir, "vecs")
-    # files_per_trigger=1: one published log file per partition (2
-    # partitions at every sf) => exactly two epochs on the native
-    # source; the store's final answer is epoch-split-invariant
-    # (oracle-verified), the second epoch exercises the
-    # batch-vs-store history path.
     parsed = (
         topic.read_stream(files_per_trigger=1)
         .select(
@@ -5253,24 +5095,8 @@ def q_streaming_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("j.embedding").alias("vec"))
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-moments-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(moments_sink(store, "vec"))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_pca did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-moments-")
+    _drain(spark, parsed.writeStream.foreachBatch(moments_sink(store, "vec")))
     return read_component(spark, store, iters=4)
 
 
@@ -5291,31 +5117,13 @@ def q_streaming_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.distinct import distinct_sink, read_distinct
 
     topic = _stream_fixture(spark, sf_dir, "events")
     parsed = _events_stream(topic, 5000).select("event_type", "user_id")
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-distinct-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                distinct_sink(store, ["event_type"], "user_id", lg_k=12)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-distinct-")
+    sink = distinct_sink(store, ["event_type"], "user_id", lg_k=12)
+    _drain(spark, parsed.writeStream.foreachBatch(sink))
     approx = read_distinct(
         spark, store, ["event_type"], "event_type string, sk binary"
     )
@@ -5443,33 +5251,15 @@ def q_user_state_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.quantiles import histogram_sink, read_quantiles
 
     topic = _stream_fixture(spark, sf_dir, "events")
     parsed = _events_stream(topic, 5000).select("event_type", "value")
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-hist-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                histogram_sink(
-                    store, ["event_type"], "value", lo=0.0, hi=100.0, nbins=50
-                )
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-hist-")
+    sink = histogram_sink(
+        store, ["event_type"], "value", lo=0.0, hi=100.0, nbins=50
+    )
+    _drain(spark, parsed.writeStream.foreachBatch(sink))
     return read_quantiles(
         spark,
         store,
@@ -5683,38 +5473,15 @@ def q_user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.bloom import bloom_sink, read_membership
 
     topic = _stream_fixture(spark, sf_dir, "docs")
-    # files_per_trigger=1 => exactly two epochs on the native
-    # source (one published log file per partition); final answer
-    # epoch-split-invariant, oracle-verified.
     keys = topic.read_stream(files_per_trigger=1).select(
         F.get_json_object("metadata", "$.doc_id").alias("key")
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-bloom-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            keys.writeStream.foreachBatch(
-                bloom_sink(store, "key", m_bits=16384, k=4)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_bloom_membership did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-bloom-")
+    sink = bloom_sink(store, "key", m_bits=16384, k=4)
+    _drain(spark, keys.writeStream.foreachBatch(sink))
     probes = spark.range(1500).select(
         "id", F.col("id").cast("string").alias("key")
     )
@@ -5746,36 +5513,15 @@ def q_streaming_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.sample import read_sample, sample_sink
 
     topic = _stream_fixture(spark, sf_dir, "docs")
-    # files_per_trigger=1 => exactly two epochs on the native
-    # source (one published log file per partition); final answer
-    # epoch-split-invariant, oracle-verified.
     keys = topic.read_stream(files_per_trigger=1).select(
         F.get_json_object("metadata", "$.doc_id").alias("key")
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-sample-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            keys.writeStream.foreachBatch(sample_sink(store, "key", k=50))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_reservoir did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-sample-")
+    sink = sample_sink(store, "key", k=50)
+    _drain(spark, keys.writeStream.foreachBatch(sink))
     return read_sample(spark, store, k=50)
 
 
@@ -6746,38 +6492,16 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     + "SELECT id, n_feats, logw FROM weights",
 )
 def q_streaming_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.operators import sampling
     from mofka_spark.streaming.dsirstore import dsir_sink, read_bucket_counts
 
     topic = _stream_fixture(spark, sf_dir, "docs")
-    # files_per_trigger=1 => exactly two epochs on the native
-    # source (one published log file per partition); final answer
-    # epoch-split-invariant, oracle-verified.
     parsed = topic.read_stream(files_per_trigger=1).select(
         F.get_json_object("metadata", "$.doc_id").cast("long").alias("doc_id"),
         F.get_json_object("metadata", "$.text").alias("text"),
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-dsir-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(dsir_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_dsir did not drain the topic")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-dsir-")
+    _drain(spark, parsed.writeStream.foreachBatch(dsir_sink(store)))
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.col("doc_id") < 1000)
     )
@@ -6921,31 +6645,13 @@ def q_count_min_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.cms import cms_estimates, cms_sink
 
     topic = _stream_fixture(spark, sf_dir, "events")
     parsed = _events_stream(topic, 5000).select("user_id")
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-cms-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                cms_sink(store, "user_id", depth=4, width=256)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-cms-")
+    sink = cms_sink(store, "user_id", depth=4, width=256)
+    _drain(spark, parsed.writeStream.foreachBatch(sink))
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 5000)
     seen = ev.select("user_id").distinct()
     est = cms_estimates(spark, store, seen, "user_id", depth=4, width=256)
@@ -7213,31 +6919,13 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_bottomk_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.sample import estimate_distinct, sample_sink
 
     topic = _stream_fixture(spark, sf_dir, "events")
     parsed = _events_stream(topic, 5000).select("event_type", "user_id")
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-bkd-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                sample_sink(store, "user_id", "event_type", k=64)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-bkd-")
+    sink = sample_sink(store, "user_id", "event_type", k=64)
+    _drain(spark, parsed.writeStream.foreachBatch(sink))
     return estimate_distinct(spark, store, k=64)
 
 
@@ -10439,19 +10127,11 @@ def q_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.linestore import (
         boilerplate_filter, line_count_sink,
     )
 
     topic = _stream_fixture(spark, sf_dir, "docs")
-    # files_per_trigger=1: one published log file per partition (2
-    # partitions at every sf) => exactly two epochs on the native
-    # source; the store's final answer is epoch-split-invariant
-    # (oracle-verified), the second epoch exercises the
-    # batch-vs-store history path.
     parsed = (
         topic.read_stream(files_per_trigger=1)
         .select(
@@ -10462,26 +10142,9 @@ def q_streaming_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("doc_id").alias("id"), _synth_corpus().alias("text"))
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-linestore-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                line_count_sink(store, min_line_chars=10)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_line_dedup did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    store = _store_path("mofka-linestore-")
+    sink = line_count_sink(store, min_line_chars=10)
+    _drain(spark, parsed.writeStream.foreachBatch(sink))
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.col("doc_id") < 1000)
     )
@@ -10854,17 +10517,13 @@ def q_web_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the iterative rounds materialize INSIDE the call (per-round
     # localCheckpoint), so the pinned shuffle width covers them — the
     # gate graph is a few thousand edges and 32-wide shuffles are all
-    # scheduler overhead (the _run_stream discipline; production crawl
-    # graphs keep the session default). Only those checkpointed rounds
-    # run at the pinned width: the finally fires before the RETURNED
-    # frame's final union/groupBy executes, so that last aggregation
-    # runs at session width — accepted, it is a single small shuffle.
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    # scheduler overhead (production crawl graphs keep the session
+    # default). Only those checkpointed rounds run at the pinned width:
+    # the pin is restored before the RETURNED frame's final
+    # union/groupBy executes, so that last aggregation runs at session
+    # width — accepted, it is a single small shuffle.
+    with _pinned_shuffle(spark):
         return connected_components_alternating(edges, "src", "dst")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
 
 def _hits_steps(iters: int) -> str:
@@ -10949,12 +10608,8 @@ def q_web_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pinned shuffle width for the per-round checkpointed joins (the
     # web_components rationale; the final join runs at session width)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with _pinned_shuffle(spark):
         return hits(nodes, edges, iters=3)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
 
 # Incrementally-accumulated web link graph (streaming/webgraph.py):
@@ -11003,19 +10658,11 @@ def q_web_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_web_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.webgraph import (
         web_graph_components, web_graph_sink,
     )
 
     topic = _stream_fixture(spark, sf_dir, "docs")
-    # files_per_trigger=1: one published log file per partition (2
-    # partitions at every sf) => exactly two epochs on the native
-    # source; the store's final answer is epoch-split-invariant
-    # (oracle-verified), the second epoch exercises the
-    # batch-vs-store history path.
     pages = (
         topic.read_stream(files_per_trigger=1)
         .select(
@@ -11028,25 +10675,10 @@ def q_streaming_web_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             for c, n in zip(_synth_link_page(), ("url", "html"))
         ))
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-webgraph-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            pages.writeStream.foreachBatch(web_graph_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_web_components did not drain")
+    store = _store_path("mofka-webgraph-")
+    _drain(spark, pages.writeStream.foreachBatch(web_graph_sink(store)))
+    with _pinned_shuffle(spark):
         return web_graph_components(spark, store)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
 
 # URL template mining (webtext.url_templates): collapse digit runs in
@@ -11138,17 +10770,9 @@ def q_url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_robots_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.streaming.robots import read_robots_rules, robots_sink
 
     topic = _stream_fixture(spark, sf_dir, "docs")
-    # files_per_trigger=1: one published log file per partition (2
-    # partitions at every sf) => exactly two epochs on the native
-    # source; the store's final answer is epoch-split-invariant
-    # (oracle-verified), the second epoch exercises the
-    # batch-vs-store history path.
     k = F.pmod(F.col("doc_id"), F.lit(7)).cast("string")
     t = F.pmod(F.col("doc_id"), F.lit(3))
     body = (
@@ -11178,25 +10802,10 @@ def q_streaming_robots_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("fetch_seq"),
         )
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-robots-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            fetches.writeStream.foreachBatch(robots_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_robots_store did not drain")
+    store = _store_path("mofka-robots-")
+    _drain(spark, fetches.writeStream.foreachBatch(robots_sink(store)))
+    with _pinned_shuffle(spark):
         return read_robots_rules(spark, store)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
 
 # PageRank over the ACCUMULATED crawl graph (store consumer #2): the
@@ -11246,18 +10855,10 @@ def q_streaming_robots_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_web_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from mofka_spark.operators.graph import pagerank
     from mofka_spark.streaming.webgraph import read_web_graph, web_graph_sink
 
     topic = _stream_fixture(spark, sf_dir, "docs")
-    # files_per_trigger=1: one published log file per partition (2
-    # partitions at every sf) => exactly two epochs on the native
-    # source; the store's final answer is epoch-split-invariant
-    # (oracle-verified), the second epoch exercises the
-    # batch-vs-store history path.
     pages = (
         topic.read_stream(files_per_trigger=1)
         .select(
@@ -11270,22 +10871,9 @@ def q_streaming_web_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             for c, n in zip(_synth_link_page(), ("url", "html"))
         ))
     )
-    store = os.path.join(tempfile.mkdtemp(prefix="mofka-webpr-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            pages.writeStream.foreachBatch(web_graph_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_web_pagerank did not drain")
+    store = _store_path("mofka-webpr-")
+    _drain(spark, pages.writeStream.foreachBatch(web_graph_sink(store)))
+    with _pinned_shuffle(spark):
         edges = read_web_graph(spark, store)
         nodes = edges.select(F.col("src").alias("id")).union(
             edges.select(F.col("dst").alias("id"))
@@ -11293,8 +10881,6 @@ def q_streaming_web_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pagerank(
             nodes, edges, src_col="src", dst_col="dst", iters=3
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
 
 # Domain blocklist (webtext.domain_blocklist_filter): suffix-at-label-

@@ -100,12 +100,15 @@ def test_native_rejected_for_capped_reads(driver):
         topic.read_stream(starting_offsets="latest", native=True)
 
 
-def test_files_per_trigger_epochs_and_rows(driver, tmp_path):
+@pytest.mark.parametrize("drain", ["processing_time", "available_now"])
+def test_files_per_trigger_epochs_and_rows(driver, tmp_path, drain):
     """files_per_trigger caps the native stream's advance by published
     files: a 2-partition topic filled by one producer flush holds one
     file per partition, so files_per_trigger=1 drains in exactly two
-    micro-batches whose union is the full row set."""
-    topic = _fill_topic(driver, name="fpt-t", partitions=2, n=40)
+    micro-batches whose union is the full row set — under a
+    ProcessingTime trigger ended by await_completion and under the
+    one-shot AvailableNow drain the streaming gates use alike."""
+    topic = _fill_topic(driver, name=f"fpt-t-{drain}", partitions=2, n=40)
     topic.mark_as_complete()
     seen = []
 
@@ -114,14 +117,17 @@ def test_files_per_trigger_epochs_and_rows(driver, tmp_path):
             (epoch_id, sorted((r["partition"], r["offset"]) for r in df.collect()))
         )
 
-    q = (
+    writer = (
         topic.read_stream(files_per_trigger=1)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(tmp_path / "ck-fpt"))
-        .trigger(processingTime="50 milliseconds")
-        .start()
     )
-    assert topic.await_completion(q, timeout=120)
+    if drain == "processing_time":
+        q = writer.trigger(processingTime="50 milliseconds").start()
+        assert topic.await_completion(q, timeout=120)
+    else:
+        q = writer.trigger(availableNow=True).start()
+        assert q.awaitTermination(120)
     non_empty = [(e, rows) for e, rows in seen if rows]
     assert len(non_empty) == 2, f"expected 2 one-file epochs, saw {len(non_empty)}"
     # each epoch is exactly one whole partition file; union is everything
@@ -130,6 +136,68 @@ def test_files_per_trigger_epochs_and_rows(driver, tmp_path):
         assert len(rows) == 20
     union = sorted(r for _, rows in non_empty for r in rows)
     assert union == sorted((p, o) for p in (0, 1) for o in range(20))
+
+
+def test_gate_drain_timeout_raises_stops_and_restores_shuffle(driver, monkeypatch):
+    """A streaming-gate drain that outlives its limit must not hand back
+    whatever the sink holds: it raises, leaves no active query behind,
+    and restores the session's shuffle width."""
+    from mofka_spark import queries
+
+    spark = driver.spark
+    topic = _fill_topic(driver, name="drain-timeout-t", partitions=1, n=5)
+    topic.mark_as_complete()
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    assert prior != "4"
+    monkeypatch.setattr(queries, "_DRAIN_TIMEOUT_S", 1)
+
+    def slow_sink(df, epoch_id):
+        time.sleep(4)
+
+    with pytest.raises(RuntimeError, match="did not finish"):
+        queries._drain(spark, topic.read_stream().writeStream.foreachBatch(slow_sink))
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prior
+
+
+def test_gate_streaming_scaffolding_lives_in_one_helper():
+    """queries.py keeps its drain scaffolding in _drain/_pinned_shuffle:
+    no gate sets a trigger, a checkpoint, a shuffle width or waits on a
+    query itself, and a gate builds a writer only as _drain's argument."""
+    import ast
+    import inspect
+
+    from mofka_spark import queries
+
+    src = inspect.getsource(queries)
+    helper, writer_args = set(), set()
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.FunctionDef) and node.name in (
+            "_drain", "_pinned_shuffle",
+        ):
+            helper.update(range(node.lineno, node.end_lineno + 1))
+        elif (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", None) == "_drain"
+            and len(node.args) == 2
+        ):
+            arg = node.args[1]
+            writer_args.update(range(arg.lineno, arg.end_lineno + 1))
+    tokens = (
+        ".trigger(",
+        "checkpointLocation",
+        "awaitTermination",
+        "await_completion",
+        '"spark.sql.shuffle.partitions"',
+    )
+    stray = []
+    for no, line in enumerate(src.splitlines(), 1):
+        if no in helper:
+            continue
+        stray += [(no, t) for t in tokens if t in line]
+        if ".writeStream" in line and no not in writer_args:
+            stray.append((no, ".writeStream"))
+    assert not stray, f"streaming scaffolding outside _drain: {stray}"
 
 
 def test_files_per_trigger_validation(driver):
