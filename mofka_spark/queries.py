@@ -10677,6 +10677,8 @@ def q_streaming_web_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = _store_path("mofka-webgraph-")
     _drain(spark, pages.writeStream.foreachBatch(web_graph_sink(store)))
+    # the component rounds checkpoint inside the call: pin them as
+    # web_components does
     with _pinned_shuffle(spark):
         return web_graph_components(spark, store)
 
@@ -10804,8 +10806,7 @@ def q_streaming_robots_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = _store_path("mofka-robots-")
     _drain(spark, fetches.writeStream.foreachBatch(robots_sink(store)))
-    with _pinned_shuffle(spark):
-        return read_robots_rules(spark, store)
+    return read_robots_rules(spark, store)
 
 
 # PageRank over the ACCUMULATED crawl graph (store consumer #2): the
@@ -10873,6 +10874,7 @@ def q_streaming_web_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = _store_path("mofka-webpr-")
     _drain(spark, pages.writeStream.foreachBatch(web_graph_sink(store)))
+    # pagerank checkpoints its edge frame inside the call: pin it
     with _pinned_shuffle(spark):
         edges = read_web_graph(spark, store)
         nodes = edges.select(F.col("src").alias("id")).union(
